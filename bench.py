@@ -126,26 +126,22 @@ def ambient_delta(before, after, gc0, gc1, wall: float) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from osmquadtree_rust_bindings_spark.session import get_spark
+    from osmquadtree_rust_bindings_spark.session import (default_cores,
+                                                         get_spark)
     import __spark_entry__ as entrymod
 
+    cpus = default_cores()
     spark = get_spark(f"local[{cpus}]", app_name="osmquadtree-bench",
-                      shuffle_partitions=int(cpus))
+                      shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     from osmquadtree_rust_bindings_spark import driver_queries as DQ
     from osmquadtree_rust_bindings_spark.session import ensure_shipped
 
     ensure_shipped(spark)
     gate_qs = entrymod.queries()
-    # r04: the j11/j9 gates merged in their batch twins (small+batch
-    # union, both driver-verified) — bench keeps timing the SMALL form
-    # alone so these series stay comparable across rounds
-    overrides = {"j11_bbox_join": DQ.q_j11_bbox_small,
-                 "j9_pip_join": DQ.q_j9_pip_small}
-    qs = {name: overrides.get(name) or getattr(DQ, f"q_{name}", None)
-          or gate_qs[name] for name in HEADLINE}
+    qs = {name: getattr(DQ, f"q_{name}", None) or gate_qs[name]
+          for name in HEADLINE}
 
     # warmup at the smallest sf: JIT, python workers, broadcast machinery.
     # Every headline query runs once at sf0.001 so the measured pass below
@@ -238,7 +234,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "rows_per_sec": round(metric_rows / total, 1),
         "metric_rows": metric_rows,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "steady_value": steady_total,
         "steady_queries": steady,
         "steady_rows_per_sec": round(metric_rows / steady_total, 1),

@@ -384,12 +384,13 @@ def _wait_scratch_stable() -> None:
 def run_orchestrated(args) -> dict:
     """One spark-submit --py-files JVM per stage (north-rule deployment
     shape), per-stage heap, fresh page-cache-friendly sequencing."""
-    from osmquadtree_rust_bindings_spark.session import build_pyfiles_zip
+    from osmquadtree_rust_bindings_spark.session import (build_pyfiles_zip,
+                                                         default_cores)
 
     zp = build_pyfiles_zip()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cores()
     res: dict = {"docs": args.docs, "vecs": args.vecs, "isolated": True,
-                 "cpus": int(cpus)}
+                 "cpus": cpus}
     # --only X = the heap/codec probe shape: one fresh spark-submit JVM
     # running exactly one measured stage (gen is prepended — idempotent,
     # it no-ops on an existing _SUCCESS corpus).  This is the invocation

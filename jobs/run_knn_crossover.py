@@ -57,7 +57,7 @@ def main() -> None:
     from osmquadtree_rust_bindings_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("local[32]", app_name="osmqt-knn-crossover")
+    spark = get_spark(app_name="osmqt-knn-crossover")
     spark.sparkContext.setLogLevel("ERROR")
 
     pts = DQ._pts_with_qt(spark, sf_dir)

@@ -85,10 +85,10 @@ def run_job(spark) -> dict:
         F.sum(F.col("tile") % 1_000_003 * F.col("n")).alias("s"),
         F.sum("n").alias("n")).collect()[0]
 
-    boxes = FX.make_bbox_queries_pdf(60)
-    bbox_rows = SJ.bbox_join(calc, boxes, point_id="img_idx").count()
-    polys = FX.make_polygons_pdf(100)
-    pip_rows = SJ.pip_join(calc, polys, point_id="img_idx").count()
+    boxes = spark.createDataFrame(FX.make_bbox_queries_pdf(60))
+    bbox_rows = SJ.bbox_join_batch(calc, boxes, point_id="img_idx").count()
+    polys = spark.createDataFrame(FX.make_polygons_pdf(100))
+    pip_rows = SJ.pip_join_batch(calc, polys, point_id="img_idx").count()
 
     wall = time.time() - t0
     calc.unpersist()
@@ -138,7 +138,7 @@ def main() -> None:
     # directory that would silently skip regeneration and feed the levels
     # a corpus with no files
     if not os.path.exists(os.path.join(CORPUS, "_SUCCESS")):
-        spark = get_spark("local[32]", app_name="osmqt-scaling-gen")
+        spark = get_spark(app_name="osmqt-scaling-gen")
         spark.sparkContext.setLogLevel("ERROR")
         I.generate_images(spark, N_IMAGES, num_partitions=256,
                           with_bytes=False).write.mode(

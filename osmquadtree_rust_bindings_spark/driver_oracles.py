@@ -587,10 +587,8 @@ SELECT cast(q.qid as bigint) AS qid, cast(p.rowkey as bigint) AS rowkey
 FROM {PTS} p, {qb} q(qid, minlon, minlat, maxlon, maxlat)
 WHERE p.lon >= q.minlon AND p.lon <= q.maxlon
   AND p.lat >= q.minlat AND p.lat <= q.maxlat"""
-    # both engine forms (small + batch) replay the same pair oracle, tagged
     o["j11_bbox_join"] = (
-        f"SELECT 'small' AS form, qid, rowkey FROM ({j11_single})\n"
-        f"UNION ALL\nSELECT 'batch' AS form, qid, rowkey FROM ({j11_single})")
+        f"SELECT 'batch' AS form, qid, rowkey FROM ({j11_single})")
 
     # PIP: convex CCW polygons -> strict half-plane conjunction (double math)
     parts = []
@@ -609,9 +607,7 @@ WHERE p.lon >= q.minlon AND p.lon <= q.maxlon
             f"FROM {PTS} p WHERE " + " AND ".join(conds))
     j9_single = "\nUNION ALL\n".join(parts)
     o["j9_pip_join"] = (
-        f"SELECT 'small' AS form, poly_id, rowkey FROM ({j9_single})\n"
-        f"UNION ALL\nSELECT 'batch' AS form, poly_id, rowkey "
-        f"FROM ({j9_single})")
+        f"SELECT 'batch' AS form, poly_id, rowkey FROM ({j9_single})")
 
     kq = _values(DQ._knn_queries(), ["qid", "lon", "lat", "k"])
     o["j10_knn_join"] = f"""

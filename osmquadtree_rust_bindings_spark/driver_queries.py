@@ -176,6 +176,25 @@ def q_a3_members_stats(spark, sf_dir):
     return out.select(*[F.col(c).cast("long").alias(c) for c in out.columns])
 
 
+def _max_split_bytes(spark, sizes) -> int:
+    """Spark's file-split size for a scan of files of ``sizes`` bytes
+    (``FilePartition.maxSplitBytes``), from the live session conf; byte
+    strings such as ``128MB`` parse with Spark's own parser."""
+    conf = spark.conf.get
+
+    def nbytes(key, default):
+        return int(spark._jvm.org.apache.spark.network.util.JavaUtils
+                   .byteStringAsBytes(conf(key, default)))
+
+    max_pb = nbytes("spark.sql.files.maxPartitionBytes", "128m")
+    open_cost = nbytes("spark.sql.files.openCostInBytes", "4m")
+    min_parts = int(conf("spark.sql.files.minPartitionNum", None)
+                    or conf("spark.sql.leafNodeDefaultParallelism", None)
+                    or spark.sparkContext.defaultParallelism)
+    total = sum(sz + open_cost for sz in sizes)
+    return min(max_pb, max(open_cost, total // min_parts))
+
+
 def q_a4_num_blocks(spark, sf_dir):
     """A4 num_blocks (reference ``src/count.rs:352-355``): the raw
     partition count has no SQL twin (it depends on Spark's file-split
@@ -186,10 +205,12 @@ def q_a4_num_blocks(spark, sf_dir):
     - ``num_blocks_le_rows``: every counted block held >=1 row (the
       distinct-partition-id formulation only sees non-empty partitions);
     - ``num_blocks_le_split_ceiling``: num_blocks <= sum over input files
-      of ceil(file_bytes / spark.sql.files.maxPartitionBytes) — Spark
-      packs splits into partitions, never the reverse, so the split count
-      is a hard ceiling computed here from the real file listing + live
-      session conf (not a constant).
+      of ceil(file_bytes / maxSplitBytes), with Spark's own
+      ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+      bytes / minPartitionNum))`` (``FilePartition.maxSplitBytes``) —
+      Spark packs splits into partitions, never the reverse, so the split
+      count is a hard ceiling computed here from the real file listing +
+      live session conf (not a constant).
 
     Engine-side all three are computed from the actual plan; the oracle
     derives the same booleans from the one fact SQL can see (the table is
@@ -206,14 +227,8 @@ def q_a4_num_blocks(spark, sf_dir):
                  for f in _os.listdir(path) if f.endswith(".parquet")]
     else:
         sizes = [_os.path.getsize(path)]
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    s = raw.strip().lower()
-    mult = 1
-    if s and s[-1] in units:
-        mult, s = units[s[-1]], s[:-1]
-    max_pb = int(s) * mult
-    ceiling = sum(math.ceil(sz / max_pb) for sz in sizes)
+    split = _max_split_bytes(spark, sizes)
+    ceiling = sum(math.ceil(sz / split) for sz in sizes)
     nb = CNT.num_blocks(li)
     rows = li.agg(F.count(F.lit(1)).alias("n_rows"))
     return nb.crossJoin(rows).select(
@@ -665,15 +680,6 @@ def q_s14_tile_counts(spark, sf_dir):
     )
 
 
-def q_a10_tile_plan(spark, sf_dir):
-    # driver-side bin-packing: deterministic but not SQL-expressible
-    pts = _pts_with_qt(spark, sf_dir)
-    cells = TIL.prepare_quadtree_tree(pts, "qt_point", maxdepth=10)
-    groups = TIL.find_tree_groups(cells, target=2000)
-    return spark.createDataFrame(groups.astype({"tile": "int64",
-                                                "weight": "int64"}))
-
-
 def q_a10_plan_invariants(spark, sf_dir):
     # A10 hash-gated invariants: the oracle cannot replay driver-side
     # bin-packing, but a correct plan MUST satisfy (a) group weights sum
@@ -720,70 +726,31 @@ def q_a11_assign_invariants(spark, sf_dir):
         F.sum("nl").cast("long").alias("not_longest"))
 
 
-def q_j11_bbox_small(spark, sf_dir):
-    # per-operator form for bench.py: the small J11 form alone, so the
-    # bench series stays comparable across rounds after the gate merged
-    # in the batch twin (same pattern as q_ann_l2_topk / q_text_quality)
-    pts = _pts_with_qt(spark, sf_dir)
-    boxes = _bbox_queries()
-    return SJ.bbox_join(pts, boxes, point_id="rowkey",
-                        batch_threshold=len(boxes) + 1).select(
-        F.col("qid").cast("long").alias("qid"),
-        F.col("rowkey").cast("long").alias("rowkey"))
-
-
-def q_j9_pip_small(spark, sf_dir):
-    # per-operator form for bench.py (see q_j11_bbox_small)
-    pts = _pts_with_qt(spark, sf_dir)
-    polys = _polygons()
-    return SJ.pip_join(pts, polys, point_id="rowkey",
-                       batch_threshold=len(polys) + 1).select(
-        "poly_id", F.col("rowkey").cast("long").alias("rowkey"))
-
-
 def q_j11_bbox_join(spark, sf_dir):
-    # merged gate: BOTH J11 forms, tagged — the small (driver-expansion +
-    # broadcast) form and bbox_join_batch (executor-side cover, the scale
-    # twin), against the same oracle replayed under each tag.  Keeps the
-    # registry inside the harness's 50-entry window while driver-verifying
-    # the batch form hash-exact (crossover: BENCH/spatial_crossover.json).
+    # the constant 'batch' form column is part of the gate's hashed rows
+    # and of its oracle
     pts = _pts_with_qt(spark, sf_dir)
     boxes = _bbox_queries()
-    # threshold pinned above the fixture size so the "small" tag always
-    # exercises the small code path even if the fixture grows
-    small = SJ.bbox_join(pts, boxes, point_id="rowkey",
-                         batch_threshold=len(boxes) + 1)
     batch = SJ.bbox_join_batch(
         pts, spark.createDataFrame(
             boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]]),
         point_id="rowkey")
-    return (
-        small.select(F.lit("small").alias("form"), "qid", "rowkey")
-        .unionByName(
-            batch.select(F.lit("batch").alias("form"), "qid", "rowkey"))
-        .select("form", F.col("qid").cast("long").alias("qid"),
-                F.col("rowkey").cast("long").alias("rowkey")))
+    return batch.select(F.lit("batch").alias("form"),
+                        F.col("qid").cast("long").alias("qid"),
+                        F.col("rowkey").cast("long").alias("rowkey"))
 
 
 def q_j9_pip_join(spark, sf_dir):
-    # merged gate: BOTH J9 forms, tagged (see q_j11_bbox_join) — small
-    # (driver vertex broadcast) and pip_join_batch (distributed cover +
-    # verts-join refine, the scale twin)
+    # form column: see q_j11_bbox_join
     pts = _pts_with_qt(spark, sf_dir)
     polys = _polygons()
-    small = SJ.pip_join(pts, polys, point_id="rowkey",
-                        batch_threshold=len(polys) + 1)
     batch = SJ.pip_join_batch(
         pts, spark.createDataFrame(polys[
             ["poly_id", "verts_lon", "verts_lat",
              "minlon", "minlat", "maxlon", "maxlat"]]),
         point_id="rowkey")
-    return (
-        small.select(F.lit("small").alias("form"), "poly_id", "rowkey")
-        .unionByName(
-            batch.select(F.lit("batch").alias("form"), "poly_id", "rowkey"))
-        .select("form", "poly_id",
-                F.col("rowkey").cast("long").alias("rowkey")))
+    return batch.select(F.lit("batch").alias("form"), "poly_id",
+                        F.col("rowkey").cast("long").alias("rowkey"))
 
 
 def q_j10_knn_join(spark, sf_dir):
@@ -816,33 +783,6 @@ def q_f8_idset_semi_join(spark, sf_dir):
             F.min("event_id").cast("long").alias("min_id"))
         .select(F.col("user_id").cast("long").alias("user_id"), "n", "min_id")
     )
-
-
-def q_x5_tile_bbox(spark, sf_dir):
-    # X5 Quadtree.as_bbox(buffer): distinct depth-6 tiles -> buffered cell
-    # bbox via the shared sqlgen fragment (same text as the oracle)
-    pts = _pts_with_qt(spark, sf_dir)
-    tiles = pts.select(Q.qt_round(F.col("qt_point"), 6).alias("tile")) \
-        .distinct()
-    tiles.createOrReplaceTempView("__tiles_x5")
-    return spark.sql(sqlgen.tile_bbox_sql("__tiles_x5", "tile", 6,
-                                          buffer=0.05))
-
-
-def q_x8_mercator(spark, sf_dir):
-    # X8 LonLat.forward — mercator meters, floored to ints
-    _pts(spark, sf_dir).createOrReplaceTempView("__pts_x8")
-    return spark.sql(sqlgen.mercator_xy_sql("__pts_x8", "rowkey",
-                                            "lon", "lat"))
-
-
-def q_x7b_date_string(spark, sf_dir):
-    # X7 timestamp_string/date_string formatting helpers
-    ev = _read(spark, sf_dir, "events")
-    return ev.select(
-        F.col("event_id").cast("long").alias("event_id"),
-        F.date_format("ts", "yyyy-MM-dd").alias("d"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"))
 
 
 def q_s13_ordered_rank(spark, sf_dir):
@@ -882,7 +822,9 @@ def q_x4_prefix_range_count(spark, sf_dir):
     import tempfile
 
     lo, hi = sqlgen.qt_key_range(_X4_PREFIX)
-    path = _os.path.join(tempfile.mkdtemp(prefix="x4_qts_"), "qts")
+    # one fixed path per process, overwritten by every call: repeated
+    # calls (bench passes) must not accumulate sf-sized temp data
+    path = _os.path.join(tempfile.gettempdir(), f"x4_qts_{_os.getpid()}")
     _pts_with_qt(spark, sf_dir).select("rowkey", "qt_point") \
         .write.mode("overwrite").parquet(path)
     qts = spark.read.parquet(path)
@@ -1042,19 +984,6 @@ def q_text_quality(spark, sf_dir):
     )
 
 
-def q_text_langid(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    return TX.with_langid(docs).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang_pred")
-
-
-def q_text_fingerprint(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    return TX.with_fingerprint(docs).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("fingerprint").cast("long").alias("fingerprint"))
-
-
 def q_ann_l2_topk(spark, sf_dir):
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -1197,32 +1126,6 @@ def q_j8_multipolygon_assembly(spark, sf_dir):
         F.col("npts").cast("long").alias("npts"), "closed",
         F.col("area2").cast("long").alias("area2"),
         F.col("nreversed").cast("long").alias("nreversed"))
-
-
-def q_a11_tile_assign(spark, sf_dir):
-    # A11 longest-prefix tile assignment (QuadtreeTree.find,
-    # src/sortblocks.rs:78-81): driver bin-packed plan (A10) broadcast as a
-    # sorted root array, per-row assignment via vectorized searchsorted;
-    # engine-only (plan is driver-side) -> rows-only check
-    pts = _pts_with_qt(spark, sf_dir)
-    cells = TIL.prepare_quadtree_tree(pts, "qt_point", maxdepth=10)
-    groups = TIL.find_tree_groups(cells, target=2000)
-    assigned = TIL.assign_tiles(pts, groups, qt_col="qt_point")
-    return (assigned.groupBy("tile")
-            .agg(F.count(F.lit(1)).cast("long").alias("num"),
-                 F.min("rowkey").cast("long").alias("min_id"))
-            .select(F.col("tile").cast("long").alias("tile"),
-                    "num", "min_id"))
-
-
-def q_x1b_qt_views(spark, sf_dir):
-    # X1 Quadtree views (reference src/elements.rs:29-36): the i64 key's
-    # slippy (x, y, z) tuple + 'ABCD' path string for depth-6 tiles;
-    # shared sqlgen fragment text on both engines
-    pts = _pts_with_qt(spark, sf_dir)
-    pts.select(Q.qt_round(F.col("qt_point"), 6).alias("tile")).distinct() \
-        .createOrReplaceTempView("__tiles_x1b")
-    return spark.sql(sqlgen.qt_views_sql("__tiles_x1b", "tile", 6))
 
 
 def q_ann_lsh_multiprobe(spark, sf_dir):

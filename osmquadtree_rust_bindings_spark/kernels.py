@@ -263,6 +263,34 @@ def calcqts_point(lon_i, lat_i, max_depth: int = MAX_DEPTH):
     return qt_from_cell(ix, iy, np.full_like(ix, max_depth))
 
 
+def bbox_cover_cells(minlon, minlat, maxlon, maxlat,
+                     depth: int) -> list[tuple[int, int]]:
+    """All depth-``depth`` qt cells intersecting each bbox.
+
+    Returns [(row_idx, cell_qt), ...].  The oracle for the spatial joins'
+    Spark SQL cover stream (``operators.spatial_join._cover_stream``).
+    """
+    minlon = np.atleast_1d(np.asarray(minlon, np.int64))
+    maxlon = np.atleast_1d(np.asarray(maxlon, np.int64))
+    minlat = np.atleast_1d(np.asarray(minlat, np.int64))
+    maxlat = np.atleast_1d(np.asarray(maxlat, np.int64))
+    n = np.int64(1) << np.int64(depth)
+    x0, y0 = norm_xy(minlon, minlat)
+    x1, y1 = norm_xy(maxlon, maxlat)
+    ix0 = np.clip(np.floor(x0 * n).astype(np.int64), 0, n - 1)
+    ix1 = np.clip(np.floor(x1 * n).astype(np.int64), 0, n - 1)
+    iy0 = np.clip(np.floor(y0 * n).astype(np.int64), 0, n - 1)
+    iy1 = np.clip(np.floor(y1 * n).astype(np.int64), 0, n - 1)
+    out = []
+    for i in range(len(ix0)):
+        xs = np.arange(ix0[i], ix1[i] + 1)
+        ys = np.arange(iy0[i], iy1[i] + 1)
+        gx, gy = np.meshgrid(xs, ys)
+        cells = qt_from_cell(gx.ravel(), gy.ravel(), np.full(gx.size, depth))
+        out.extend((i, int(c)) for c in cells)
+    return out
+
+
 def calcqts_bbox(minlon, minlat, maxlon, maxlat,
                  buffer: float = QT_BUFFER, max_depth: int = MAX_DEPTH):
     """qt of a bbox: descend from root while the buffer-expanded child cell of

@@ -14,11 +14,11 @@ Format::
     END
     END
 
-Output is the polygon frame shape consumed by
-``operators.spatial_join.pip_join`` — one row per ring with int 1e-7-deg
-vertex arrays and the precomputed bbox (the reference's ``bounds`` /
-``check_box`` pruning data).  Holes get ``is_hole=True``; a point is
-inside the filter iff it is inside an outer ring and in no hole
+Output is the polygon frame shape consumed (via ``createDataFrame``) by
+``operators.spatial_join.pip_join_batch`` — one row per ring with int
+1e-7-deg vertex arrays and the precomputed bbox (the reference's
+``bounds`` / ``check_box`` pruning data).  Holes get ``is_hole=True``; a
+point is inside the filter iff it is inside an outer ring and in no hole
 (``contains_point`` semantics).
 """
 

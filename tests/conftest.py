@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -22,3 +23,16 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@contextmanager
+def with_conf(spark, keys):
+    """Set session confs for the block, restoring the old values after."""
+    saved = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

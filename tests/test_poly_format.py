@@ -58,7 +58,8 @@ def test_poly_feeds_pip_join(spark):
     from osmquadtree_rust_bindings_spark.functions import quadtree as Q
     pts_df = Q.with_point_qt(spark.createDataFrame(pts), "lon", "lat", 18,
                              out="qt_point")
-    got = SJ.pip_join(pts_df, outer, point_id="rowkey").toPandas()
+    got = SJ.pip_join_batch(pts_df, spark.createDataFrame(outer),
+                             point_id="rowkey").toPandas()
     assert sorted(got.rowkey) == [1, 2]  # 150e6 lon is outside
 
 

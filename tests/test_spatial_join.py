@@ -3,6 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import with_conf
 
 from osmquadtree_rust_bindings_spark import kernels as K
 from osmquadtree_rust_bindings_spark.operators import calcqts as CQ
@@ -27,36 +28,139 @@ def calc(spark, images_pdf):
         "image_id", "lon", "lat", "qt", "qt_point", "cell").cache()
 
 
+def _sorted(df, cols):
+    return df.sort_values(cols).reset_index(drop=True)
+
+
+def _bbox_oracle(images_pdf, boxes):
+    """Brute-force closed-interval containment: (qid, image_id) pairs."""
+    plon = images_pdf.lon.to_numpy(np.int64)
+    plat = images_pdf.lat.to_numpy(np.int64)
+    ids = images_pdf.image_id.to_numpy()
+    qids = boxes.qid.to_numpy()
+    exp_q, exp_i = [], []
+    CH = 2000
+    for lo in range(0, len(boxes), CH):
+        hi = min(len(boxes), lo + CH)
+        m = ((plon[None, :] >= boxes.minlon.values[lo:hi, None])
+             & (plon[None, :] <= boxes.maxlon.values[lo:hi, None])
+             & (plat[None, :] >= boxes.minlat.values[lo:hi, None])
+             & (plat[None, :] <= boxes.maxlat.values[lo:hi, None]))
+        q, j = np.nonzero(m)
+        exp_q.extend(qids[q + lo].tolist())
+        exp_i.extend(ids[j].tolist())
+    return _sorted(pd.DataFrame({"qid": exp_q, "image_id": exp_i}),
+                   ["qid", "image_id"])
+
+
+def _pip_oracle(images_pdf, polys):
+    """Ray-crossing kernel over every point: (poly_id, image_id) pairs."""
+    plon = images_pdf.lon.to_numpy(np.float64)
+    plat = images_pdf.lat.to_numpy(np.float64)
+    ids = images_pdf.image_id.to_numpy()
+    rows = []
+    for p in polys.itertuples(index=False):
+        inside = K.points_in_polygon(
+            plon, plat, np.asarray(p.verts_lon, np.float64),
+            np.asarray(p.verts_lat, np.float64))
+        rows.extend((p.poly_id, iid) for iid in ids[inside])
+    return _sorted(pd.DataFrame(rows, columns=["poly_id", "image_id"]),
+                   ["poly_id", "image_id"])
+
+
+def _bbox_join(spark, calc, boxes):
+    return _sorted(SJ.bbox_join_batch(calc, spark.createDataFrame(
+        boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]])).toPandas(),
+        ["qid", "image_id"])
+
+
+def _pip_join(spark, calc, polys):
+    return _sorted(SJ.pip_join_batch(calc, spark.createDataFrame(polys[
+        ["poly_id", "verts_lon", "verts_lat",
+         "minlon", "minlat", "maxlon", "maxlat"]])).toPandas(),
+        ["poly_id", "image_id"])
+
+
+def test_cover_stream_matches_numpy_oracle(spark):
+    # edge cases of the SQL cover, cell for cell against the numpy cover
+    # (Spark's sequence() counts down on start > stop, np.arange is
+    # empty); codegen fallback off so a janino compile failure raises
+    # instead of silently running interpreted
+    rng = np.random.default_rng(5)
+    n = 400
+    cx = rng.integers(-1_800_000_000, 1_800_000_001, n)
+    cy = rng.integers(-900_000_000, 900_000_001, n)
+    w = rng.integers(0, 150_000_000, n)
+    h = rng.integers(0, 150_000_000, n)
+    rand = pd.DataFrame({
+        "minlon": np.maximum(cx - w, -1_800_000_000),
+        "maxlon": np.minimum(cx + w, 1_800_000_000),
+        "minlat": np.maximum(cy - h, -900_000_000),
+        "maxlat": np.minimum(cy + h, 900_000_000)}).astype(np.float64)
+    edge = pd.DataFrame([
+        # touching +-180 lon
+        (1_790_000_000, 100_000_000, 1_800_000_000, 200_000_000),
+        (-1_800_000_000, -200_000_000, -1_790_000_000, -100_000_000),
+        (-1_800_000_000, -10_000_000, 1_800_000_000, 10_000_000),
+        # at / beyond the mercator limit and exactly +-90 lat
+        (0, 850_000_000, 50_000_000, 860_000_000),
+        (0, 860_000_000, 50_000_000, 900_000_000),
+        (0, -900_000_000, 50_000_000, -860_000_000),
+        (0, 900_000_000, 0, 900_000_000),
+        (0, -900_000_000, 0, -900_000_000),
+        (-1_800_000_000, -900_000_000, 1_800_000_000, 900_000_000),
+        # zero-area points, on and off cell edges
+        (0, 0, 0, 0),
+        (123_456_789, -98_765_432, 123_456_789, -98_765_432),
+        # float bounds
+        (55.5, 55.5, 200_000_055.5, 100_000_055.5),
+        (-300_000_000.5, -55.5, -55.5, 200_000_000.25),
+        # inverted across cells: no cover rows
+        (200_000_000, 0, 0, 100_000_000),
+        (0, 100_000_000, 200_000_000, 0),
+    ], columns=["minlon", "minlat", "maxlon", "maxlat"]).astype(np.float64)
+    boxes = pd.concat([edge, rand], ignore_index=True)
+    boxes.insert(0, "qid", np.arange(len(boxes)))
+    with np.errstate(divide="ignore", invalid="ignore"):  # lat = +-90
+        cells = K.bbox_cover_cells(
+            boxes.minlon.values, boxes.minlat.values, boxes.maxlon.values,
+            boxes.maxlat.values, SJ.COVER_DEPTH)
+    exp = pd.DataFrame(
+        [(int(boxes.qid[i]), c >> (63 - 2 * SJ.COVER_DEPTH))
+         for i, c in cells], columns=["qid", "cell_cov"])
+    # the shuffle stops Catalyst folding the cover's projections into
+    # the local relation, so every cover expression goes through codegen
+    frame = spark.createDataFrame(boxes).repartition(3)
+    with with_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+        cov = SJ._cover_stream(frame, "qid", SJ.COVER_DEPTH).toPandas()
+    # id and bounds keep their input types; one row per (box, cell)
+    assert cov.minlon.dtype == np.float64
+    pd.testing.assert_frame_equal(
+        _sorted(cov[["qid", "cell_cov"]], ["qid", "cell_cov"]),
+        _sorted(exp, ["qid", "cell_cov"]), check_dtype=False)
+    assert not cov.qid.isin([13, 14]).any()  # the inverted boxes
+    # the zero-area boxes cover exactly one cell each
+    assert (cov.qid.value_counts()[[6, 7, 9, 10]] == 1).all()
+
+
+def test_bbox_join_runs_no_python(spark, calc):
+    boxes = FX.make_bbox_queries_pdf(20)
+    plan = _executed_plan(SJ.bbox_join_batch(calc, spark.createDataFrame(
+        boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]])))
+    assert "Python" not in plan and "Generate" in plan
+
+
 def test_bbox_join_exact(spark, calc, images_pdf):
     boxes = FX.make_bbox_queries_pdf(60)
-    got = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    # oracle: closed-interval cross check
-    rows = []
-    for b in boxes.itertuples(index=False):
-        m = ((images_pdf.lon >= b.minlon) & (images_pdf.lon <= b.maxlon)
-             & (images_pdf.lat >= b.minlat) & (images_pdf.lat <= b.maxlat))
-        rows.extend((b.qid, iid) for iid in images_pdf.image_id[m])
-    exp = pd.DataFrame(rows, columns=["qid", "image_id"]) \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
+    got = _bbox_join(spark, calc, boxes)
     assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp)
-
-
-def test_bbox_join_batch_matches_small_form(spark, calc):
-    boxes = FX.make_bbox_queries_pdf(60)
-    a = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    b = SJ.bbox_join_batch(calc, spark.createDataFrame(
-        boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]])).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(got, _bbox_oracle(images_pdf, boxes),
+                                  check_dtype=False)
 
 
 def test_bbox_join_batch_large_box_set(spark, calc, images_pdf):
-    # 2*10^4 boxes entering via bbox_join must auto-dispatch to the
-    # batch form (executor-side cover, no driver expansion / forced
-    # broadcast) and equal the vectorized brute-force oracle
+    # 2*10^4 boxes (executor-side cover, no driver expansion / forced
+    # broadcast) equal the vectorized brute-force oracle
     rng = np.random.default_rng(17)
     nb = 20_000
     w = rng.integers(1_000_000, 200_000_000, nb)
@@ -68,34 +172,18 @@ def test_bbox_join_batch_large_box_set(spark, calc, images_pdf):
         "minlon": cx - w, "minlat": cy - h,
         "maxlon": cx + w, "maxlat": cy + h,
     })
-    got = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    plon = images_pdf.lon.to_numpy(np.int64)
-    plat = images_pdf.lat.to_numpy(np.int64)
-    ids = images_pdf.image_id.to_numpy()
-    exp_q, exp_i = [], []
-    CH = 2000
-    for lo in range(0, nb, CH):
-        hi = min(nb, lo + CH)
-        m = ((plon[None, :] >= boxes.minlon.values[lo:hi, None])
-             & (plon[None, :] <= boxes.maxlon.values[lo:hi, None])
-             & (plat[None, :] >= boxes.minlat.values[lo:hi, None])
-             & (plat[None, :] <= boxes.maxlat.values[lo:hi, None]))
-        q, j = np.nonzero(m)
-        exp_q.extend((q + lo).tolist())
-        exp_i.extend(ids[j].tolist())
-    exp = pd.DataFrame({"qid": exp_q, "image_id": exp_i}) \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
+    exp = _bbox_oracle(images_pdf, boxes)
     assert len(exp) > 0
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    pd.testing.assert_frame_equal(_bbox_join(spark, calc, boxes), exp,
+                                  check_dtype=False)
 
 
 def test_bbox_join_batch_float_bounds(spark, calc, images_pdf):
     # _cover_stream preserves input column types: float bounds must
-    # compare as doubles in the batch refine exactly like the small
-    # form.  Boxes are anchored 0.5 units past real point coordinates,
-    # so truncating bounds to long would wrongly include each box's
-    # anchor point — this pins the non-truncating behavior.
+    # compare as doubles in the refine.  Boxes are anchored 0.5 units
+    # past real point coordinates, so truncating bounds to long would
+    # wrongly include each box's anchor point — this pins the
+    # non-truncating behavior.
     p = images_pdf.iloc[:20]
     boxes = pd.DataFrame({
         "qid": np.arange(20),
@@ -104,80 +192,28 @@ def test_bbox_join_batch_float_bounds(spark, calc, images_pdf):
         "maxlon": p.lon.values + 200_000_000.5,
         "maxlat": p.lat.values + 50_000_000.5,
     })
-    small = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    batch = SJ.bbox_join_batch(calc, spark.createDataFrame(
-        boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]])).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    rows = []
-    for b in boxes.itertuples(index=False):
-        m = ((images_pdf.lon >= b.minlon) & (images_pdf.lon <= b.maxlon)
-             & (images_pdf.lat >= b.minlat) & (images_pdf.lat <= b.maxlat))
-        rows.extend((b.qid, iid) for iid in images_pdf.image_id[m])
-    exp = pd.DataFrame(rows, columns=["qid", "image_id"]) \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
+    batch = _bbox_join(spark, calc, boxes)
     # every anchor point sits 0.5 below its box's minlon: must be absent
     anchor_pairs = set(zip(range(20), p.image_id))
     assert not (set(zip(batch.qid, batch.image_id)) & anchor_pairs)
-    pd.testing.assert_frame_equal(batch, exp, check_dtype=False)
-    pd.testing.assert_frame_equal(small, exp, check_dtype=False)
+    pd.testing.assert_frame_equal(batch, _bbox_oracle(images_pdf, boxes),
+                                  check_dtype=False)
 
 
 def test_pip_join_exact(spark, calc, images_pdf):
     polys = FX.make_polygons_pdf(80)
-    got = SJ.pip_join(calc, polys).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    rows = []
-    for p in polys.itertuples(index=False):
-        inside = K.points_in_polygon(
-            images_pdf.lon.to_numpy(np.float64),
-            images_pdf.lat.to_numpy(np.float64),
-            np.asarray(p.verts_lon, np.float64),
-            np.asarray(p.verts_lat, np.float64))
-        rows.extend((p.poly_id, iid)
-                    for iid in images_pdf.image_id[inside])
-    exp = pd.DataFrame(rows, columns=["poly_id", "image_id"]) \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
+    got = _pip_join(spark, calc, polys)
     assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp)
-
-
-def test_pip_join_batch_matches_small_form(spark, calc):
-    polys = FX.make_polygons_pdf(80)
-    a = SJ.pip_join(calc, polys).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    b = SJ.pip_join_batch(calc, spark.createDataFrame(polys[
-        ["poly_id", "verts_lon", "verts_lat",
-         "minlon", "minlat", "maxlon", "maxlat"]])).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(got, _pip_oracle(images_pdf, polys))
 
 
 def test_pip_join_batch_large_polygon_set(spark, calc, images_pdf):
-    # 6*10^3 polygons entering via pip_join must auto-dispatch to the
-    # batch form (distributed cover + verts-join refine, no driver
-    # vertex broadcast) and equal the ray-crossing kernel oracle
+    # 6*10^3 polygons (distributed cover + verts-join refine, no driver
+    # vertex broadcast) equal the ray-crossing kernel oracle
     polys = FX.make_polygons_pdf(6_000, seed=31)
-    got = SJ.pip_join(calc, polys).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    plon = images_pdf.lon.to_numpy(np.float64)
-    plat = images_pdf.lat.to_numpy(np.float64)
-    rows = []
-    for p in polys.itertuples(index=False):
-        m = ((plon >= p.minlon) & (plon <= p.maxlon)
-             & (plat >= p.minlat) & (plat <= p.maxlat))
-        if not m.any():
-            continue
-        inside = K.points_in_polygon(
-            plon[m], plat[m],
-            np.asarray(p.verts_lon, np.float64),
-            np.asarray(p.verts_lat, np.float64))
-        rows.extend((p.poly_id, iid)
-                    for iid in images_pdf.image_id.values[m][inside])
-    exp = pd.DataFrame(rows, columns=["poly_id", "image_id"]) \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
+    exp = _pip_oracle(images_pdf, polys)
     assert len(exp) > 0
-    pd.testing.assert_frame_equal(got, exp)
+    pd.testing.assert_frame_equal(_pip_join(spark, calc, polys), exp)
 
 
 def test_knn_join_exact(spark, calc, images_pdf):
@@ -363,34 +399,22 @@ def test_k_ring_covers_block():
 # ---- hot-cell skew fixtures (SURVEY §7 risk 3; VERDICT r04 item 3) ----
 # A dense city block at 100TB scale = 10^5+ queries stacked over ONE
 # depth-8 cover cell: the cell_cov equi-join key is maximally skewed.
-# These pin (a) batch output == small-form output on exactly that shape,
+# These pin (a) join output == the brute-force oracle on exactly that shape,
 # and (b) that AQE's skew-join split actually engages on the hot cell
 # once the cover stream is too big to broadcast (forced here by conf so
 # the mechanism is exercised at test scale; thresholds are the knobs a
 # 100TB deployment would leave at their defaults of 256MB/64MB).
 
-from contextlib import contextmanager
-
-
-@contextmanager
 def _forced_shuffle_skew(spark):
     """Disable broadcast + shrink AQE skew thresholds so the test-scale
     hot cell takes the same code path a cluster-scale one would."""
-    keys = {
+    return with_conf(spark, {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
             "65536",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16384",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-    }
-    saved = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    })
 
 
 def _executed_plan(df) -> str:
@@ -421,9 +445,8 @@ def test_bbox_join_batch_hot_cell_skew(spark, calc, images_pdf):
     counts = cov.groupBy("cell_cov").count().toPandas()["count"]
     assert counts.max() / counts.sum() > 0.95
 
-    small = SJ.bbox_join(calc, boxes, batch_threshold=10**9).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    assert len(small) > 0
+    exp = _bbox_oracle(images_pdf, boxes)
+    assert len(exp) > 0
     with _forced_shuffle_skew(spark):
         batch = SJ.bbox_join_batch(
             calc, spark.createDataFrame(boxes))
@@ -431,7 +454,7 @@ def test_bbox_join_batch_hot_cell_skew(spark, calc, images_pdf):
             batch.collect(), columns=["qid", "image_id"]) \
             .sort_values(["qid", "image_id"]).reset_index(drop=True)
         plan = _executed_plan(batch)
-    pd.testing.assert_frame_equal(got, small, check_dtype=False)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, "AQE skew split did not engage"
     assert "skewed" in plan  # AQEShuffleRead ... skewed
@@ -459,9 +482,8 @@ def test_pip_join_batch_hot_polygon_skew(spark, calc, images_pdf):
         })
     polys = pd.DataFrame(rows)
 
-    small = SJ.pip_join(calc, polys, batch_threshold=10**9).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    assert len(small) > 0
+    exp = _pip_oracle(images_pdf, polys)
+    assert len(exp) > 0
     with _forced_shuffle_skew(spark):
         batch = SJ.pip_join_batch(
             calc, spark.createDataFrame(polys[
@@ -471,6 +493,6 @@ def test_pip_join_batch_hot_polygon_skew(spark, calc, images_pdf):
             batch.collect(), columns=["poly_id", "image_id"]) \
             .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
         plan = _executed_plan(batch)
-    pd.testing.assert_frame_equal(got, small, check_dtype=False)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, "AQE skew split did not engage"
