@@ -345,8 +345,10 @@ def _stage_mem(stage: str, docs: int) -> str:
     BASELINE.md round-5 boundary paragraph)."""
     if stage == "minhash_lsh_pairs" and "SPARK_MINHASH_MEM" in os.environ:
         return os.environ["SPARK_MINHASH_MEM"]
-    base = os.environ.get("SPARK_DRIVER_MEM", "16g")
-    if base == "16g":  # scale the default; an explicit override wins
+    from osmquadtree_rust_bindings_spark.session import driver_memory
+
+    base = driver_memory()  # SPARK_DRIVER_MEM, else the host default
+    if base == "16g":  # scale the full-size heap; any other heap wins
         if stage == "minhash_lsh_pairs" and docs >= 40_000_000:
             return "32g"
         if stage == "simhash_pairs" and docs >= 80_000_000:

@@ -21,8 +21,8 @@ import time
 import uuid
 from dataclasses import asdict, dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -93,30 +93,37 @@ class Lineage:
         with job_progress(spark, f"stage {stage}"):
             df = fn()
             df.write.mode("overwrite").parquet(out_path)
-        back = spark.read.parquet(out_path)
-        # per-partition (= per output file) lineage from the files themselves
-        parts = (
-            back.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        total_rows = 0
+        parts = parquet_file_stats(out_path)
         for p in parts:
-            fname = p["file"].replace("file://", "")
-            nbytes = os.path.getsize(fname) if os.path.exists(fname) else -1
-            total_rows += p["rows"]
             self._append({"run_id": self.run_id, "stage": stage,
-                          "status": "partition", "file": os.path.basename(fname),
-                          "rows": p["rows"], "bytes": nbytes})
+                          "status": "partition", **p})
         rec = StageRecord(
             run_id=self.run_id, stage=stage, status="complete",
-            input_rows=input_rows, output_rows=total_rows,
-            output_bytes=sum(
-                os.path.getsize(os.path.join(out_path, f))
-                for f in os.listdir(out_path) if f.endswith(".parquet")),
+            input_rows=input_rows,
+            output_rows=sum(p["rows"] for p in parts),
+            output_bytes=sum(p["bytes"] for p in parts),
             num_partitions=len(parts), t_start=t0, t_end=time.time())
         self._append(asdict(rec))
-        return back
+        return spark.read.parquet(out_path)
 
     def summary(self) -> list[dict]:
         return [r for r in self.records() if r.get("status") == "complete"]
+
+
+def parquet_file_stats(path: str) -> list[dict]:
+    """Per-file lineage of a parquet output: ``file`` (relative to
+    ``path``), ``rows`` from the file's footer and ``bytes`` on disk, for
+    every data file including those in ``partitionBy`` subdirectories.
+    Reads footers only (the output directory must be visible to the
+    driver), so no Spark job scans the output back."""
+    stats = []
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for n in sorted(names):
+            if not n.endswith(".parquet") or n.startswith((".", "_")):
+                continue
+            full = os.path.join(root, n)
+            stats.append({"file": os.path.relpath(full, path),
+                          "rows": pq.read_metadata(full).num_rows,
+                          "bytes": os.path.getsize(full)})
+    return stats

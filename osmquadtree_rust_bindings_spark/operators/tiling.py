@@ -6,11 +6,15 @@ Reference chain (SURVEY.md §3.3): prepare_quadtree_tree (A9,
 src/sortblocks.rs:144-152, target=40000 per __init__.py:147,167-168) →
 sort_blocks repartition sink (S14, src/sortblocks.rs:156-169).
 
-Spark shape: the weighted tree is a driver-side structure built from a
-``groupBy(qt_round(qt, depth)).count()`` (distinct cells ≪ rows); group
-planning is deterministic driver-side bin-packing (§8.5); tile assignment is
-a broadcast longest-prefix lookup kernel (A11 analogue) — vectorized numpy
-inside a pandas UDF; the physical repartition is a single shuffle
+Spark shape: the weighted tree is a driver-side histogram from one bounded
+``groupBy(qt_round(qt, depth)).count()`` job (:func:`plan_histogram`:
+distinct cells ≪ rows, at most ``MAX_PLAN_CELLS`` collected, a coarser
+sketch-chosen depth, summed from the cached finest histogram, only when
+that histogram overflows); group planning is deterministic driver-side
+bin-packing (§8.5), vectorized in numpy one depth at a time; tile
+assignment is a broadcast equi-join on the plan's cells (A11 analogue),
+with a pandas-UDF longest-prefix kernel for qt domains without a
+histogram; the physical repartition is a single shuffle
 ``repartition(tile_key).sortWithinPartitions(qt, id)`` (Spark's external
 sort replaces the reference's temp-file staging knobs).
 
@@ -33,6 +37,7 @@ from osmquadtree_rust_bindings_spark import kernels as K
 from osmquadtree_rust_bindings_spark.functions import quadtree as Q
 
 GROUP_TARGET = 40_000  # reference run_sortblocks default (__init__.py:147)
+MAX_PLAN_CELLS = 200_000  # driver-side bound on the plan histogram
 
 
 def _round_i(qt: int, nd: int) -> int:
@@ -41,17 +46,6 @@ def _round_i(qt: int, nd: int) -> int:
         return qt
     mask = -(1 << (63 - 2 * nd)) if nd else 0
     return (qt & mask) | nd
-
-
-def _is_parent_i(parent: int, child: int) -> bool:
-    return (child & 31) >= (parent & 31) and _round_i(child, parent & 31) == parent
-
-
-def _common_i(a: int, b: int) -> int:
-    d = min(a & 31, b & 31)
-    while d and _round_i(a, d) != _round_i(b, d):
-        d -= 1
-    return _round_i(a, d)
 
 
 def longest_prefix_assign(qts: np.ndarray, roots_sorted: np.ndarray) -> np.ndarray:
@@ -132,7 +126,7 @@ class QuadtreeTree:
 
 
 def choose_plan_depth(df: DataFrame, qt_col: str = "qt",
-                      max_cells: int = 200_000,
+                      max_cells: int = MAX_PLAN_CELLS,
                       maxdepth: int = 17) -> int:
     """Deepest planning depth whose distinct-cell count stays under
     ``max_cells`` — ONE pass computing an approx-distinct sketch per depth,
@@ -151,6 +145,19 @@ def choose_plan_depth(df: DataFrame, qt_col: str = "qt",
     return 0
 
 
+def _cell_counts(df: DataFrame, qt_col: str, depth: int,
+                 weight: str | None = None) -> DataFrame:
+    """(cell, weight): rows per depth-``depth`` cell, or the sum of the
+    ``weight`` column when re-aggregating an existing histogram."""
+    cell = Q.qt_round_dyn(F.col(qt_col), F.lit(depth)).alias("cell")
+    w = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    return df.groupBy(cell).agg(w.alias("weight"))
+
+
+def _sorted_cells(agg: DataFrame) -> pd.DataFrame:
+    return agg.toPandas().sort_values("cell").reset_index(drop=True)
+
+
 def prepare_quadtree_tree(df: DataFrame, qt_col: str = "qt",
                           maxdepth: int = 17) -> pd.DataFrame:
     """A9: per-cell weights at ``maxdepth`` — one narrow aggregation.
@@ -159,78 +166,88 @@ def prepare_quadtree_tree(df: DataFrame, qt_col: str = "qt",
     cell, matching the reference tree built from the -qts.pbf stream.
     Returns a pandas frame (cell, weight) sorted by cell.
     """
-    agg = (
-        df.select(Q.qt_round_dyn(F.col(qt_col),
-                                 F.lit(maxdepth)).alias("cell"))
-        .groupBy("cell").count()
-    )
-    pdf = agg.toPandas().rename(columns={"count": "weight"})
-    return pdf.sort_values("cell").reset_index(drop=True)
+    return _sorted_cells(_cell_counts(df, qt_col, maxdepth))
+
+
+def plan_histogram(df: DataFrame, qt_col: str = "qt", maxdepth: int = 17,
+                   max_cells: int = MAX_PLAN_CELLS
+                   ) -> tuple[int, pd.DataFrame]:
+    """The planning depth and its (cell, weight) histogram, scanning the
+    rows once: collect at most ``max_cells + 1`` cells of the (cached)
+    depth-``maxdepth`` histogram.  Distinct counts only shrink at coarser
+    depths, so if they all fit, ``maxdepth`` is the plan depth and that
+    frame is the plan histogram (equal to ``prepare_quadtree_tree(df,
+    qt_col, maxdepth)``).  On overflow, :func:`choose_plan_depth` runs over
+    the cached cells (same distinct values per depth, so the same sketch
+    estimates as over the rows) and the chosen depth's histogram is
+    summed from them, which keeps the driver bound at any corpus size."""
+    finest = _cell_counts(df, qt_col, maxdepth).persist()
+    try:
+        cells = _sorted_cells(finest.limit(max_cells + 1))
+        if len(cells) <= max_cells:
+            return maxdepth, cells
+        depth = choose_plan_depth(finest, "cell", max_cells, maxdepth)
+        return depth, _sorted_cells(
+            _cell_counts(finest, "cell", depth, weight="weight"))
+    finally:
+        finest.unpersist()
 
 
 def find_tree_groups(cells: pd.DataFrame, target: int = GROUP_TARGET,
                      min_target: int | None = None) -> pd.DataFrame:
     """A10 (normative §8.5): bottom-up greedy grouping.
 
-    Post-order walk of the implied trie; each node accumulates its own
-    weight plus the carried (ungrouped) weight of its children in quadrant
-    order; when the accumulated weight reaches ``min_target`` the node
-    becomes a group root and the carry resets; the root flushes the rest.
+    Post-order walk of the implied trie (every ancestor of every cell is a
+    node); each node accumulates its own weight, then the carried
+    (ungrouped) weight of each child in quadrant order; whenever the
+    accumulated weight reaches ``min_target`` the node becomes a group
+    root and the accumulator resets; the root flushes the rest.
     Returns (tile_qt, weight) — group roots with their grouped weight.
-    Deterministic: input cells are processed in sorted (i64 = depth-first
-    spatial) order, which IS post-order when replayed bottom-up.
+
+    Vectorized one depth at a time, deepest first: a node's items are its
+    own weight plus at most four child carries, so the cumulative sum with
+    reset is five numpy steps over all nodes of that depth.
     """
     if min_target is None:
         min_target = target // 2
-    order = np.argsort(cells["cell"].to_numpy(np.int64), kind="stable")
-    cell_arr = cells["cell"].to_numpy(np.int64)[order]
-    w_arr = cells["weight"].to_numpy(np.int64)[order]
+    cell_arr = cells["cell"].to_numpy(np.int64)
+    w_arr = cells["weight"].to_numpy(np.int64)
+    cell_depth = cell_arr & 31
 
-    groups: list[tuple[int, int]] = []
-    # Stack of [qt, carried_weight] along the current root-to-cell path.
-    # i64 sorted order visits parents before their subtrees (pre-order), so
-    # one pass + an unwind whenever the next cell leaves the top's subtree
-    # is exactly a post-order accumulation.  A node can only cross the
-    # threshold at the moment weight is ADDED to it, so every addition is
-    # followed by an emit-and-reset check; closing nodes therefore always
-    # carry < min_target upward.  When two sibling subtrees meet below the
-    # current stack parent, their lowest common ancestor is interposed as an
-    # implicit node so the emission happens at the deepest accumulating
-    # node — identical to a walk of the fully materialized trie, but O(cells)
-    # time and O(depth) memory.
-    stack: list[list[int]] = [[0, 0]]
-
-    def add_to_top(wgt: int) -> None:
-        stack[-1][1] += wgt
-        if len(stack) > 1 and stack[-1][1] >= min_target:
-            groups.append((stack[-1][0], stack[-1][1]))
-            stack[-1][1] = 0
-
-    def unwind_until_ancestor_of(c: int) -> None:
-        while len(stack) > 1 and not _is_parent_i(stack[-1][0], c):
-            top_qt, carry = stack.pop()
-            lca = _common_i(top_qt, c)
-            if (lca & 31) > (stack[-1][0] & 31):
-                stack.append([lca, 0])  # interpose implicit ancestor
-            add_to_top(carry)
-
-    for c, w in zip(cell_arr.tolist(), w_arr.tolist()):
-        unwind_until_ancestor_of(c)
-        if c != stack[-1][0]:
-            stack.append([c, 0])
-        add_to_top(int(w))
-    while len(stack) > 1:
-        _, carry = stack.pop()
-        add_to_top(carry)  # emit check skips the root (len(stack)==1)
-    # root flushes whatever is left (no min_target requirement)
-    if stack[0][1] > 0:
-        groups.append((stack[0][0], stack[0][1]))
+    emitted = [np.zeros(1, np.int64)]  # the root flushes the remainder
+    # nodes of the depth below (sorted) and the weight each carries up
+    nodes = np.empty(0, np.int64)
+    carry = np.empty(0, np.int64)
+    for d in range(int(cell_depth.max()) if len(cell_arr) else 0, -1, -1):
+        own = cell_depth == d
+        parents = K.qt_round(nodes, d)
+        level = np.union1d(parents, cell_arr[own])
+        # items[:, 0] is the node's own weight; items[:, 1 + q] the carry
+        # of its child in quadrant q (i64 order of siblings = q order).  An
+        # absent child adds 0 after a check left acc < min_target (or, if
+        # min_target <= 0, after item 0 already made the node a root), so
+        # it never changes the outcome.
+        items = np.zeros((len(level), 5), np.int64)
+        np.add.at(items[:, 0], np.searchsorted(level, cell_arr[own]),
+                  w_arr[own])
+        if len(nodes):
+            items[np.searchsorted(level, parents),
+                  1 + ((nodes >> (63 - 2 * (d + 1))) & 3)] = carry
+        acc = np.zeros(len(level), np.int64)
+        root = np.zeros(len(level), bool)
+        for k in range(5):
+            acc += items[:, k]
+            hit = acc >= min_target
+            root |= hit
+            acc[hit] = 0
+        emitted.append(level[root])
+        nodes, carry = level, acc
 
     # The walk fixes the group-root SET; the authoritative per-group weight
     # is the exact longest-prefix assignment of the input cells (post-
     # emission arrivals land on the emitted node, so walk-time tallies can
     # drift from real assignment counts — recompute, don't estimate).
-    roots = np.unique(np.array([g[0] for g in groups] + [0], dtype=np.int64))
+    roots = np.unique(np.concatenate(emitted))
     assigned = longest_prefix_assign(cell_arr, roots)
     out = (pd.DataFrame({"tile": assigned, "weight": w_arr})
            .groupby("tile", as_index=False)["weight"].sum())
@@ -376,8 +393,7 @@ def run_sortblocks(df: DataFrame, out_path: str, qt_col: str = "qt",
     from osmquadtree_rust_bindings_spark.functions.format import LogTimes
 
     lt = LogTimes()
-    depth = choose_plan_depth(df, qt_col, maxdepth=max_qt_level)
-    cells = prepare_quadtree_tree(df, qt_col, depth)
+    depth, cells = plan_histogram(df, qt_col, max_qt_level)
     lt("prepare quadtree tree")
     groups = find_tree_groups(cells, target=target, min_target=min_target)
     lt("find tree groups")

@@ -4,23 +4,23 @@ The full reference lifecycle (SURVEY.md §3) as named, independently
 resumable stages:
 
   calcqts   run_calcqts: lon/lat + bbox/point qt + coarse cell
-  tileplan  prepare_quadtree_tree + find_tree_groups (driver-side plan,
-            persisted as a tiny parquet so resume reuses the exact plan)
-  tiled     assign_tiles + repartition-by-tile write (sort_blocks S14)
+  tileplan  plan_histogram + find_tree_groups: one bounded histogram job
+            picks the depth, a vectorized driver-side planner groups it
+            (persisted as a tiny parquet so resume reuses the exact plan)
+  tiled     assign_tiles_broadcast over the plan's own histogram (rebuilt
+            only when the plan stage was skipped on resume)
   counts    per-tile Count fingerprint (the pipeline checksum, §5.2)
 
 Each stage goes through Lineage.run_stage: skipped when already complete
-for the run_id, per-partition rows/bytes recorded, half-written outputs
-re-run.  A killed job resumes mid-pipeline by re-invoking with the same
-run_id and workdir.
+for the run_id, per-file rows/bytes recorded from the parquet footers,
+half-written outputs re-run.  A killed job resumes mid-pipeline by
+re-invoking with the same run_id and workdir.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from osmquadtree_rust_bindings_spark.checkpoint import Lineage
 from osmquadtree_rust_bindings_spark.operators import calcqts as CQ
@@ -31,17 +31,12 @@ from osmquadtree_rust_bindings_spark.operators import tiling as T
 class TilingPipeline:
     def __init__(self, spark: SparkSession, workdir: str,
                  run_id: str | None = None, group_target: int = T.GROUP_TARGET,
-                 group_depth: int = 17, salt_over: int | None = None,
-                 use_broadcast: bool = True):
+                 group_depth: int = 17, salt_over: int | None = None):
         self.spark = spark
         self.lineage = Lineage(workdir, run_id)
         self.group_target = group_target
         self.group_depth = group_depth
         self.salt_over = salt_over
-        # broadcast-join assignment (zero Python in the hot path — the
-        # measured scale path); the pandas longest-prefix kernel remains
-        # as the fallback for qt domains with no cell histogram
-        self.use_broadcast = use_broadcast
 
     def run(self, images: DataFrame) -> dict[str, DataFrame]:
         spark = self.spark
@@ -53,41 +48,44 @@ class TilingPipeline:
                 images.drop("bytes") if "bytes" in images.columns
                 else images))
 
+        planned: dict = {}
+
         def plan() -> DataFrame:
-            depth = min(self.group_depth,
-                        T.choose_plan_depth(calc, "qt"))
-            cells = T.prepare_quadtree_tree(calc, "qt", depth)
+            depth, cells = T.plan_histogram(calc, "qt", self.group_depth)
             groups = T.find_tree_groups(cells, target=self.group_target)
+            planned.update(depth=depth, cells=cells, groups=groups)
             # persist the planning depth with the plan so a resumed run
             # reuses the exact same assignment domain
-            groups["plan_depth"] = depth
             return spark.createDataFrame(
-                groups.astype({"tile": np.int64, "weight": np.int64,
-                               "plan_depth": np.int64}))
+                groups.assign(plan_depth=depth).astype(
+                    {"tile": np.int64, "weight": np.int64,
+                     "plan_depth": np.int64}))
 
         plan_df = lin.run_stage(spark, "tileplan", plan)
-        plan_pdf = plan_df.toPandas().astype(
-            {"tile": np.int64, "weight": np.int64})
-        groups_pdf = plan_pdf[["tile", "weight"]]
-        if "plan_depth" in plan_pdf.columns and len(plan_pdf):
-            plan_depth = int(plan_pdf["plan_depth"].astype(np.int64).iloc[0])
-        else:
-            # resumed plan written by an older version (no persisted
-            # depth), or an empty corpus: re-derive deterministically
-            plan_depth = min(self.group_depth,
-                             T.choose_plan_depth(calc, "qt"))
+        if not planned:
+            # the plan stage was skipped on resume: reload the stored plan
+            plan_pdf = plan_df.toPandas().astype(
+                {"tile": np.int64, "weight": np.int64})
+            planned["groups"] = plan_pdf[["tile", "weight"]]
+            if "plan_depth" in plan_pdf.columns and len(plan_pdf):
+                planned["depth"] = int(
+                    plan_pdf["plan_depth"].astype(np.int64).iloc[0])
+            else:
+                # plan written by an older version (no persisted depth):
+                # re-derive deterministically
+                planned["depth"], planned["cells"] = T.plan_histogram(
+                    calc, "qt", self.group_depth)
 
         def assign() -> DataFrame:
-            if not self.use_broadcast:
-                return T.assign_tiles(calc, groups_pdf,
-                                      salt_over=self.salt_over)
-            # the cell domain is bounded (choose_plan_depth keeps it under
-            # max_cells), so rebuilding it is one narrow agg; assignment
-            # is then a broadcast equi-join on the compacted cell key
-            cells = T.prepare_quadtree_tree(calc, "qt", plan_depth)
-            return T.assign_tiles_broadcast(calc, cells, groups_pdf,
-                                            plan_depth,
-                                            salt_over=self.salt_over)
+            # the cell domain is bounded (plan_histogram keeps it under
+            # max_cells), so only a resumed run re-aggregates it;
+            # assignment is a broadcast equi-join on the compacted cell key
+            depth = planned["depth"]
+            cells = planned.get("cells")
+            if cells is None:
+                cells = T.prepare_quadtree_tree(calc, "qt", depth)
+            return T.assign_tiles_broadcast(calc, cells, planned["groups"],
+                                            depth, salt_over=self.salt_over)
 
         tiled = lin.run_stage(spark, "tiled", assign)
 

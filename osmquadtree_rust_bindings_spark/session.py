@@ -91,6 +91,29 @@ def default_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
+def default_driver_memory(meminfo: str | None) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half of the host's
+    ``MemTotal`` (the text of ``/proc/meminfo``), capped at 16g; 16g when
+    the text is missing or has no ``MemTotal`` line."""
+    for line in (meminfo or "").splitlines():
+        if line.startswith("MemTotal:"):
+            half_mb = int(line.split()[1]) // 2048
+            return "16g" if half_mb >= 16 * 1024 else f"{half_mb}m"
+    return "16g"
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else this host's default heap."""
+    explicit = os.environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    try:
+        with open("/proc/meminfo") as f:
+            return default_driver_memory(f.read())
+    except OSError:
+        return default_driver_memory(None)
+
+
 def get_spark(master: str | None = None, app_name: str = "osmquadtree-spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None,
@@ -103,10 +126,10 @@ def get_spark(master: str | None = None, app_name: str = "osmquadtree-spark",
     b = (
         SparkSession.builder.master(master).appName(app_name)
         # local mode: the driver JVM hosts all executor threads.  16g
-        # measured fastest on this box — oversized heaps (48g) trade 2x+
-        # wall time to GC pauses on the bench suite.
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # measured fastest on a 32-core host — oversized heaps (48g) trade
+        # 2x+ wall time to GC pauses on the bench suite; on smaller hosts
+        # the heap is capped at half the physical memory.
+        .config("spark.driver.memory", driver_memory())
         # Unrolled kernel expressions (18-level calc_qts descent) generate
         # one long consume method; HotSpot refuses to JIT methods > 8 KB
         # bytecode by default, silently running them in the bytecode

@@ -7,7 +7,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osmquadtree_rust_bindings_spark.checkpoint import Lineage
+from conftest import with_conf
+from osmquadtree_rust_bindings_spark.checkpoint import (
+    Lineage,
+    parquet_file_stats,
+)
 from osmquadtree_rust_bindings_spark.plans.pipeline import TilingPipeline
 from osmquadtree_rust_bindings_spark.sources import images as I
 
@@ -23,18 +27,44 @@ def images(spark):
 def test_pipeline_end_to_end(spark, images, tmp_path):
     wd = str(tmp_path / "run1")
     pipe = TilingPipeline(spark, wd, run_id="r1", group_target=400)
-    out = pipe.run(images)
-    assert out["tiled"].count() == N
-    assert out["counts"].agg(F.sum("num")).collect()[0][0] == N
+    # a janino failure in the plan aggregate or the broadcast assign
+    # raises instead of silently running interpreted
+    with with_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+        out = pipe.run(images)
+        assert out["tiled"].count() == N
+        assert out["counts"].agg(F.sum("num")).collect()[0][0] == N
     # lineage: 4 complete stages + per-partition rows
     recs = pipe.lineage.records()
     stages = [r for r in recs if r.get("status") == "complete"]
     assert [s["stage"] for s in stages] == \
         ["calcqts", "tileplan", "tiled", "counts"]
-    parts = [r for r in recs if r.get("status") == "partition"]
-    assert sum(p["rows"] for p in parts if any(
-        s["stage"] == "calcqts" for s in stages)) >= N
-    assert all(p["bytes"] > 0 for p in parts)
+    for s in stages:
+        # one partition record per parquet file, rows from the footers
+        path = pipe.lineage.stage_path(s["stage"])
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        parts = [r for r in recs if r.get("status") == "partition"
+                 and r["stage"] == s["stage"]]
+        assert sorted(p["file"] for p in parts) == files
+        assert s["num_partitions"] == len(files)
+        assert sum(p["rows"] for p in parts) == s["output_rows"] \
+            == spark.read.parquet(path).count()
+        assert sum(p["bytes"] for p in parts) == s["output_bytes"] > 0
+        assert all(p["bytes"] > 0 for p in parts)
+    assert stages[0]["output_rows"] == N
+
+
+def test_parquet_file_stats_partitioned_output(spark, images, tmp_path):
+    path = str(tmp_path / "by_w")
+    images.write.partitionBy("w").parquet(path)
+    stats = parquet_file_stats(path)
+    files = [os.path.relpath(os.path.join(root, n), path)
+             for root, _dirs, names in os.walk(path)
+             for n in names if n.endswith(".parquet")
+             and not n.startswith(".")]
+    assert sorted(s["file"] for s in stats) == sorted(files)
+    assert all(os.sep in s["file"] for s in stats)  # inside w=... dirs
+    assert sum(s["rows"] for s in stats) == N
+    assert sum(s["bytes"] for s in stats) > 0
 
 
 def test_pipeline_resume_skips_completed(spark, images, tmp_path):
@@ -57,6 +87,24 @@ def test_pipeline_resume_skips_completed(spark, images, tmp_path):
     stages = [r["stage"] for r in pipe2.lineage.records()
               if r.get("status") == "complete"]
     assert sorted(stages) == ["calcqts", "counts", "tiled", "tileplan"]
+
+
+def test_resume_after_plan_reuses_stored_plan(spark, images, tmp_path):
+    wd = str(tmp_path / "run5")
+    first = TilingPipeline(spark, wd, run_id="r5", group_target=400)
+    want = sorted(tuple(r) for r in first.run(images)["counts"].collect())
+    plan_mtime = os.path.getmtime(first.lineage.stage_path("tileplan"))
+    # simulate a job killed after the plan stage
+    keep = [r for r in first.lineage.records()
+            if r["stage"] in ("calcqts", "tileplan")]
+    with open(first.lineage.path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in keep)
+
+    pipe = TilingPipeline(spark, wd, run_id="r5", group_target=400)
+    out = pipe.run(images)
+    assert os.path.getmtime(pipe.lineage.stage_path("tileplan")) \
+        == plan_mtime
+    assert sorted(tuple(r) for r in out["counts"].collect()) == want
 
 
 def test_half_written_stage_is_rerun(spark, images, tmp_path):

@@ -68,3 +68,18 @@ def test_resolve_shuffle_partitions(monkeypatch):
     import os as _os
     assert rsp("local[*]") == max(16, 2 * (_os.cpu_count() or 8))
     assert rsp("not-a-master") == max(16, 2 * (_os.cpu_count() or 8))
+
+
+def test_default_driver_memory():
+    from osmquadtree_rust_bindings_spark.session import (
+        default_driver_memory as ddm,
+    )
+
+    # half of MemTotal (kB -> MiB), capped at 16g
+    assert ddm("MemTotal:       16479424 kB\nMemFree: 1 kB\n") == "8046m"
+    assert ddm("MemFree: 1 kB\nMemTotal: 4194304 kB\n") == "2048m"
+    assert ddm("MemTotal: 33554432 kB\n") == "16g"
+    assert ddm("MemTotal: 134217728 kB\n") == "16g"
+    # unreadable or missing MemTotal: the old fixed default
+    assert ddm(None) == "16g"
+    assert ddm("MemFree: 1 kB\n") == "16g"

@@ -137,6 +137,78 @@ def test_find_tree_groups_vs_oracle(spark, calc):
         assert got.weight.sum() == N
 
 
+def _random_histogram(rng) -> pd.DataFrame:
+    """Cells at mixed depths 0-17 around a few cluster centres (so siblings
+    and ancestors of one another meet), with optional hot cell and root.
+    Morton bits are drawn over the full non-negative range (bits 62..0), so
+    every quadrant appears at every depth, including depth 1."""
+    top = np.iinfo(np.int64).max
+
+    def bits(size):
+        return rng.integers(0, top, size, dtype=np.int64, endpoint=True)
+
+    centres = bits(int(rng.integers(1, 5)))
+    n = int(rng.integers(1, 120))
+    keep = rng.integers(0, 18, n)  # depth of the prefix shared with a centre
+    mask = np.where(keep == 0, 0, -(np.int64(1) << (63 - 2 * keep)))
+    raw = ((centres[rng.integers(0, len(centres), n)] & mask)
+           | (bits(n) & ~mask))
+    cells = K.qt_round((raw & ~np.int64(31)) | 17, rng.integers(0, 18, n))
+    if rng.random() < 0.3:
+        cells = np.append(cells, 0)  # the root as a cell of its own
+    cells = np.unique(cells)
+    weight = rng.integers(1, 60, len(cells)).astype(np.int64)
+    if rng.random() < 0.5:
+        weight[rng.integers(0, len(cells))] = int(rng.integers(1000, 50_000))
+    return pd.DataFrame({"cell": cells, "weight": weight})
+
+
+def test_find_tree_groups_random_histograms_vs_oracle():
+    rng = np.random.default_rng(20261017)
+    hists = [pd.DataFrame({"cell": np.array([0], np.int64),
+                           "weight": np.array([7], np.int64)})]
+    hists += [_random_histogram(rng) for _ in range(200)]
+    for cells in hists:
+        for target in (1, 10, 300, 5000):
+            got = T.find_tree_groups(cells, target=target)
+            exp = _oracle_groups(cells, target, target // 2)
+            pd.testing.assert_frame_equal(got, exp)
+            assert got.weight.sum() == cells.weight.sum()
+
+
+def test_plan_histogram_one_job_or_bounded_fallback(calc):
+    full = T.prepare_quadtree_tree(calc, "qt", maxdepth=17)
+    depth, cells = T.plan_histogram(calc, "qt", 17, max_cells=len(full))
+    assert depth == 17
+    pd.testing.assert_frame_equal(cells, full)
+    # finest histogram over the bound: the sketch picks a coarser depth
+    depth, cells = T.plan_histogram(calc, "qt", 17, max_cells=50)
+    want = T.choose_plan_depth(calc, "qt", max_cells=50)
+    assert depth == want < 17
+    pd.testing.assert_frame_equal(
+        cells, T.prepare_quadtree_tree(calc, "qt", want))
+
+
+def test_plan_histogram_scans_rows_once(spark, calc):
+    """The overflow path re-aggregates the cached finest histogram rather
+    than rescanning the rows: an identity pandas UDF on the input counts
+    how many times each row is read."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("long")
+    def tap(qt: pd.Series) -> pd.Series:
+        seen.add(len(qt))
+        return qt
+
+    tapped = calc.select(tap("qt").alias("qt"))
+    for max_cells, want_depth in ((N, 17), (50, None)):
+        seen.value = 0
+        depth, cells = T.plan_histogram(tapped, "qt", 17, max_cells)
+        assert seen.value == N
+        assert cells.weight.sum() == N
+        assert depth == (want_depth or T.choose_plan_depth(calc, "qt", 50))
+
+
 def test_group_weights_bounded(calc):
     cells = T.prepare_quadtree_tree(calc, "qt", maxdepth=17)
     target = 200
